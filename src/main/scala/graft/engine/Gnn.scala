@@ -26,6 +26,7 @@ object Gnn {
 
   def weight(i: Int, j: Int): Double = ((i * 31 + j * 17) % 7 - 3) / 10.0
   def bias(i: Int): Double = (i % 5 - 2) / 10.0
+  def weightRow(i: Int): Array[Double] = Array.tabulate(Dim)(weight(i, _))
 
   /** Dense forward pass on one aggregated neighborhood vector. */
   def forward(mean: Array[Double]): Array[Double] = {

@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.functions.DenseDot
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -185,24 +187,24 @@ object StreamingGnn {
   case class CustPool(custkey: Long, n_neigh: Long,
       p1: Double, p2: Double, p3: Double, p4: Double)
 
+  private val poolW = Array.tabulate(4)(i => Gnn.weightRow(i + TrainOps.PoolOff))
+
   /** Per-neighbor pooled pre-activations: σ(W_pool[i]·x + b_pool[i]),
-    * round-9 — the EXACT arithmetic of the batch operator's generated
-    * column expression: same left-assoc fold, StrictMath.exp (Spark
-    * 4.1.2's exp codegen calls java.lang.StrictMath.exp, while
-    * Math.exp may be JIT-intrinsified and differ in the last ulp —
-    * ADVICE r5; the StatsOps.psiOf StrictMath.log pattern), and the
-    * same scala-BigDecimal HALF_UP rounding Spark's Round uses, so the
-    * streaming snapshot hash-matches the batch oracle on any JVM. */
+    * round-9 — the EXACT arithmetic of the batch operator: the dense row
+    * is the DenseDot kernel's own fold (so a vector shorter than 64 fails
+    * as it does in batch), StrictMath.exp (Spark 4.1.2's exp codegen
+    * calls java.lang.StrictMath.exp, while Math.exp may be
+    * JIT-intrinsified and differ in the last ulp — ADVICE r5; the
+    * StatsOps.psiOf StrictMath.log pattern), and the same scala-BigDecimal
+    * HALF_UP rounding Spark's Round uses, so the streaming snapshot
+    * hash-matches the batch oracle on any JVM. */
   def poolZ(vec: Array[Float]): Array[Double] = {
+    DenseDot.requireLength(vec.length, Gnn.Dim)
+    val x = (j: Int) => vec(j).toDouble
     val out = new Array[Double](4)
     var i = 0
     while (i < 4) {
-      val r = i + TrainOps.PoolOff
-      var acc = Gnn.weight(r, 0) * vec(0).toDouble
-      var j = 1
-      val m = math.min(Gnn.Dim, vec.length)
-      while (j < m) { acc += Gnn.weight(r, j) * vec(j).toDouble; j += 1 }
-      acc += Gnn.bias(r)
+      val acc = DenseDot.fold(poolW(i), Gnn.bias(i + TrainOps.PoolOff), x)
       val sig = 1.0 / (1.0 + StrictMath.exp(-acc))
       out(i) = BigDecimal(sig)
         .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble

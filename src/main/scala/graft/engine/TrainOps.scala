@@ -227,6 +227,15 @@ object TrainOps {
           / ((lit(2.0) * col("n_pos")) * col("n_neg"))).as("auc"))
   }
 
+  /** Dense-layer row r, Σ Gnn.weight(r, j)·x[j] + Gnn.bias(r), through
+    * the native kernel (graft.functions.DenseDot), registered per session
+    * like `LlmOps.vecDot`. */
+  private def denseRow(s: SparkSession, x: Column, r: Int): Column = {
+    s.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_dense_dot", graft.functions.DenseDot.build, "built-in")
+    call_function("graft_dense_dot", x, typedLit(Gnn.weightRow(r)), lit(Gnn.bias(r)))
+  }
+
   /** Dropout probability numerator: md5 % 10 < 3 → 30% of the mean-vector
     * coordinates dropped, survivors scaled by 1/(1−p) = 10/7 (inverted
     * dropout, Srivastava et al. 2014). */
@@ -238,9 +247,9 @@ object TrainOps {
     * coordinate, survivors scale by 10/7. Reproducible across engines,
     * partitionings, and restarts (the property a resumable training job
     * needs from its regularizer — same device as q_gnn_neg_sampling).
-    * Fully relational: the mask, scale, 64×4 matmul, and ReLU are all
-    * generated codegen'd column expressions — no UDF, one shuffle (the
-    * mean aggregation). */
+    * Fully relational: the mask, scale and ReLU are codegen'd column
+    * expressions, the 64×4 matmul is four DenseDot rows — no UDF, one
+    * shuffle (the mean aggregation). */
   def q_gnn_dropout_forward(s: SparkSession, dir: String): DataFrame = {
     val aggs = (1 to Gnn.Dim).map(i =>
       avg(element_at(col("embedding"), i).cast("double")).as(s"m$i"))
@@ -251,19 +260,15 @@ object TrainOps {
         lit(10L)) < DropTenths).as(s"k$j")
     }
     val masked = m.select(col("src") +: (1 to Gnn.Dim).map(j => col(s"m$j")) ++: maskCols: _*)
-    val dCols = (1 to Gnn.Dim).map { j =>
-      when(col(s"k$j"), lit(0.0))
-        .otherwise(col(s"m$j") * (lit(10.0) / lit(7))).as(s"d$j")
-    }
+    val d = array((1 to Gnn.Dim).map { j =>
+      when(col(s"k$j"), lit(0.0)).otherwise(col(s"m$j") * (lit(10.0) / lit(7)))
+    }: _*).as("d")
     val nDropped = (1 to Gnn.Dim)
       .map(j => when(col(s"k$j"), 1).otherwise(0))
       .reduce(_ + _).cast("bigint").as("n_dropped")
-    val dropped = masked.select(col("src") +: nDropped +: dCols: _*)
+    val dropped = masked.select(col("src"), nDropped, d)
     val hCols = (0 until 4).map { i =>
-      val fold = (2 to Gnn.Dim).foldLeft(
-        lit(Gnn.weight(i, 0)) * col("d1"))(
-        (acc, j) => acc + lit(Gnn.weight(i, j - 1)) * col(s"d$j"))
-      val z = fold + lit(Gnn.bias(i))
+      val z = denseRow(s, col("d"), i)
       round(when(z > 0.0, z).otherwise(lit(0.0)), 6).as(s"h${i + 1}")
     }
     dropped.select(col("src").as("custkey") +: col("n_dropped") +: hCols: _*)
@@ -280,15 +285,11 @@ object TrainOps {
     * element-wise MAX. MAX is order-blind, so the only determinism pin
     * needed is the round-9 sigmoid (libm exp ulp); no sum-order issue
     * exists at all. One shuffle (the per-customer max aggregation); the
-    * per-neighbor dense layer is a generated codegen'd expression. */
+    * per-neighbor dense layer is four codegen'd DenseDot rows. */
   def q_gnn_graphsage_pool(s: SparkSession, dir: String): DataFrame = {
     val zCols = (0 until 4).map { i =>
-      val fold = (2 to Gnn.Dim).foldLeft(
-        lit(Gnn.weight(i + PoolOff, 0)) * element_at(col("embedding"), 1).cast("double"))(
-        (acc, j) => acc + lit(Gnn.weight(i + PoolOff, j - 1))
-          * element_at(col("embedding"), j).cast("double"))
-      round(lit(1.0) / (lit(1.0) + exp(-(fold + lit(Gnn.bias(i + PoolOff))))), 9)
-        .as(s"z${i + 1}")
+      val z = denseRow(s, col("embedding"), i + PoolOff)
+      round(lit(1.0) / (lit(1.0) + exp(-z)), 9).as(s"z${i + 1}")
     }
     GraphOps.neighborFeatures(s, dir)
       .select(col("src") +: zCols: _*)
@@ -316,8 +317,7 @@ object TrainOps {
     val ue = GraphOps.undProj(s, dir, GraphOps.TriangleMinCooccur)
     val n = Tables.embeddings(s, dir).agg(count(lit(1)).as("c"))
     val xq = (1 to Gnn.Dim).map(j =>
-      round(element_at(col("embedding"), j).cast("double") * 1000000, 0)
-        .cast("bigint").as(s"x$j"))
+      Dsl.rlong(element_at(col("embedding"), j).cast("double") * 1000000).as(s"x$j"))
     // node-count-sized feature table, materialized once (it feeds both
     // the neighbor-sum leg and the self-feature leg) and broadcast into
     // both joins — the only real shuffle left is the 64-column sum
@@ -333,17 +333,13 @@ object TrainOps {
       .groupBy(col("a"))
       .agg(sum(col("bx1")).as("nb1"),
         (2 to Gnn.Dim).map(j => sum(col(s"bx$j")).as(s"nb$j")): _*)
-    val sCols = (1 to Gnn.Dim).map(j =>
-      (lit(2L) * col(s"x$j") + col(s"nb$j")).as(s"s$j"))
+    val sv = array((1 to Gnn.Dim).map(j =>
+      (lit(2L) * col(s"x$j") + col(s"nb$j")) / lit(1000000)): _*).as("s")
     val pre = broadcast(feats).join(nsums, col("node") === col("a"))
-      .select(col("node") +: sCols: _*)
+      .select(col("node"), sv)
     val hCols = (0 until 4).map { i =>
-      val r = i + GinOff
-      val fold = (2 to Gnn.Dim).foldLeft(
-        lit(Gnn.weight(r, 0)) * (col("s1") / lit(1000000)))(
-        (acc, j) => acc + lit(Gnn.weight(r, j - 1)) * (col(s"s$j") / lit(1000000)))
-      round(lit(1.0) / (lit(1.0) + exp(-(fold + lit(Gnn.bias(r))))), 9)
-        .as(s"h${i + 1}")
+      val z = denseRow(s, col("s"), i + GinOff)
+      round(lit(1.0) / (lit(1.0) + exp(-z)), 9).as(s"h${i + 1}")
     }
     pre.select(col("node").as("part_key") +: hCols: _*)
       .orderBy("part_key")

@@ -89,6 +89,28 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), "top-k must not globally sort")
   }
 
+  test("GNN dense layers run the native kernel; no 64-term column fold is left") {
+    // the replaced fold printed one "(w * x)" term per weight: 4 × 64 per layer
+    val weightTerm = """\(-?\d+\.\d+(E-?\d+)? \* """.r
+    val plans = Seq("q_gnn_graphsage_pool", "q_gnn_dropout_forward", "q_gnn_gin").map { q =>
+      val df = SparkEntry.queries(q)(spark, sf0001)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert("graft_dense_dot\\(".r.findAllIn(p).size >= 4,
+        s"$q: the 4 dense rows must run the native kernel:\n$p")
+      val terms = weightTerm.findAllIn(p).size
+      assert(terms < graft.engine.Gnn.Dim, s"$q: $terms weight-product terms left:\n$p")
+      q -> p
+    }.toMap
+    val pool = plans("q_gnn_graphsage_pool")
+    assert(!pool.contains("element_at"), s"graphsage_pool reads the vector only in the kernel:\n$pool")
+    // "*(n) Project" marks a whole-stage-codegen stage: the per-neighbor
+    // dense layer must sit inside one, not break the span
+    assert(pool.linesIterator.exists(l =>
+      """\*\(\d+\) Project""".r.findFirstIn(l).isDefined && l.contains("graft_dense_dot")),
+      s"graphsage_pool dense layer must stay inside whole-stage codegen:\n$pool")
+  }
+
   test("per-group top-k gets WindowGroupLimit pruning on both shuffle sides") {
     // rank <= k over a window must plan partial + final WindowGroupLimit:
     // each map task keeps only its local top-k BEFORE the shuffle, so the
