@@ -537,8 +537,9 @@ object Gnn {
     * correctly rounded), re-pinned to integer state by round(t, 0)
     * before the next step — iterations can never compound float
     * divergence. Execution: K keyed sums over the pre-partitioned
-    * projection MV with the |V|-bounded z table broadcast per step
-    * (the pagerank shape); feature/degree tables built once. */
+    * projection MV with the |V|-sized z table joined through the
+    * probe-gated stateHint per step (broadcast below the guard — the
+    * pagerank shape); feature/degree tables built once. */
   def q_gnn_appnp(s: SparkSession, dir: String): DataFrame = {
     val ue = GraphOps.undProj(s, dir, GraphOps.TriangleMinCooccur)
     val n = Tables.embeddings(s, dir).agg(count(lit(1)).as("c"))
@@ -558,7 +559,7 @@ object Gnn {
     for (_ <- 1 to 3) {
       val zB = z.select(col("node").as("zn") +:
         (1 to 4).map(j => col(s"z$j").as(s"bz$j")): _*)
-      val nsum = ue.join(broadcast(zB), col("b") === col("zn"))
+      val nsum = ue.join(GraphOps.stateHint(s, dir, zB, "zn"), col("b") === col("zn"))
         .groupBy(col("a"))
         .agg(sum(col("bz1")).as("s1"),
           (2 to 4).map(j => sum(col(s"bz$j")).as(s"s$j")): _*)

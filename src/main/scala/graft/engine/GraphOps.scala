@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.engine.Ckpt.CkptOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -333,26 +333,23 @@ object GraphOps {
     val nodes = t.select(col("src").as("v"))
       .union(t.select(col("dst").as("v")))
       .distinct().ckpt()
-    // checkpoint every 2nd hop (the pagerank cadence; freshStats resets
-    // the inherited size estimate): these loops have no broadcast
-    // subqueries to cut, so the per-hop materialization was pure
-    // scheduler overhead — 27 jobs / ~1 s of planning gaps measured.
+    // cut every 2nd hop and after the last (the pagerank cadence): these
+    // loops have no broadcast subqueries to cut, so the per-hop
+    // materialization was pure scheduler overhead — 27 jobs / ~1 s of
+    // planning gaps measured.
     // The forward and backward sweeps are INDEPENDENT k-hop min-label
     // propagations over the same edge MV (each ~14 jobs of ~20 ms
     // scheduler/planning latency) — overlap them on two driver threads
     // (Par.run, guide §2.6) instead of running 2×SccHops rounds
     // back-to-back; per-sweep semantics (hop count, cadence,
     // checkpoints) unchanged.
-    def sweep(srcCol: String, dstCol: String, lbl: String): DataFrame = {
-      var x = nodes.select(col("v"), col("v").as(lbl)).ckpt()
-      for (it <- 1 to SccHops) {
+    def sweep(srcCol: String, dstCol: String, lbl: String): DataFrame =
+      Superstep.run(s, s"q_graph_scc_colors.$lbl",
+        nodes.select(col("v"), col("v").as(lbl)).ckpt(), SccHops, 2) { (x, _) =>
         val prop = t.join(x, col(srcCol) === col("v"))
           .select(col(dstCol).as("v"), col(lbl))
-        x = x.union(prop).groupBy(col("v")).agg(min(col(lbl)).as(lbl))
-        if (it % 2 == 0 || it == SccHops) x = freshStats(s, x.ckpt())
+        x.union(prop).groupBy(col("v")).agg(min(col(lbl)).as(lbl))
       }
-      x
-    }
     val Seq(f, b) = Par.run(Seq[() => DataFrame](
       () => sweep("src", "dst", "f"),
       () => sweep("dst", "src", "b")))
@@ -935,50 +932,75 @@ object GraphOps {
       .orderBy("size")
   }
 
-  /** PageRank (10 power iterations, reset 0.15, r₀=1) over the
-    * UNDIRECTED co-purchase graph as declarative relational algebra:
+  /** PageRank power-iteration count (shared with the unrolled oracle
+    * CTE chains of q_graph_pagerank and q_graph_pagerank_w). */
+  val PagerankIters = 10
+
+  /** PageRank (PagerankIters power iterations, reset 0.15, r₀=1) over
+    * the UNDIRECTED co-purchase graph as declarative relational algebra:
     * each iteration is one join + keyed aggregation — a Pregel superstep
     * expressed as a shuffle, with no driver-side state (the round-1
     * GraphX mirror lives on in the test suite as an independent check).
     * Undirected means no dangling mass: Σr is conserved at exactly
-    * |V_connected| every step. Deterministic (rounded ranks + id
-    * tie-break) and oracle-checked against a 10-step unrolled CTE chain
-    * in DuckDB. Vertex ids: customer→2k, part→2k+1 (key spaces
+    * |V_connected| every step (mod the per-term 1e-9 rounding; pinned
+    * in the test suite on the full rank table). Deterministic (rounded
+    * ranks + id tie-break) and oracle-checked against an unrolled CTE
+    * chain in DuckDB. Vertex ids: customer→2k, part→2k+1 (key spaces
     * overlap). */
-  def q_graph_pagerank(s: SparkSession, dir: String): DataFrame = {
-    // The degree-weighted arc list is the shared session MV (pre-hash-
-    // partitioned on dst — the checkpoint preserves the partitioning,
-    // the broadcast join keeps it, so every iteration's groupBy(dst)
-    // aggregates partition-locally with NO exchange: the only per-step
-    // data movement is the rank-table broadcast).
-    val undW = undWeighted(s, dir)
-    var ranks = undDegrees(s, dir).select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to 10) {
-      ranks = undW
-        // probe-gated broadcast (stateHint): below the |V| guard the rank
-        // table broadcasts and chaining the 10 steps through broadcast
-        // exchanges makes the whole computation ONE job; above it the
-        // hint drops and the rank table pre-hash-partitions on the join
-        // key instead (shuffle join, edge MV re-exchanges at most once).
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .groupBy(col("dst"))
-        // per-term contributions rounded at the 9th decimal via the
-        // 1e9-scaled BIGINT device and summed exactly (order-blind).
-        // round(y*1e9, 0) is computed on the SAME double product in both
-        // engines — measured zero-divergence, unlike round(y, 9) whose
-        // decimal-vs-float implementations split true near-ties
-        // (~1e-5 of terms; one such term broke gcn_norm at sf0.1).
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") / col("d") * 1e9)).cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      // checkpoint every 2nd step: bounds plan depth (planning + codegen
-      // cost of a 10-deep broadcast chain is worse than 5 short jobs)
-      // without paying a scheduler round-trip for every single step.
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
+  def q_graph_pagerank(s: SparkSession, dir: String): DataFrame =
+    topParts(pagerankRanks(s, dir))
+
+  /** Full (node, r) rank table of q_graph_pagerank. The degree-weighted
+    * arc list is the shared session MV, pre-hash-partitioned on dst —
+    * the checkpoint preserves the partitioning, the broadcast join keeps
+    * it, so every iteration's groupBy(dst) aggregates partition-locally
+    * with NO exchange: the only per-step data movement is the rank-table
+    * broadcast. The rank state joins through the probe-gated stateHint:
+    * below the |V| guard the rank table broadcasts and the steps between
+    * two cuts chain into ONE job; above it the hint drops and the rank
+    * table pre-hash-partitions on the join key instead (shuffle join,
+    * edge MV re-exchanges at most once). */
+  private[graft] def pagerankRanks(s: SparkSession, dir: String): DataFrame =
+    pagerank(s, "q_graph_pagerank", undWeighted(s, dir), undDegrees(s, dir),
+      col("r") / col("d"), PagerankIters, stateHint(s, dir, _, "rn"))
+
+  /** `iters` PageRank supersteps from r₀ = 1 on every node of `nodes`,
+    * checkpointed every 2nd step: bounds plan depth (planning + codegen
+    * cost of a 10-deep broadcast chain is worse than 5 short jobs)
+    * without paying a scheduler round-trip for every single step.
+    * Returns the full (node, r) table. Shared by q_graph_pagerank,
+    * q_graph_pagerank_w and q_text_textrank. */
+  private[graft] def pagerank(s: SparkSession, op: String, arcs: DataFrame,
+      nodes: DataFrame, term: Column, iters: Int,
+      stateJoin: DataFrame => DataFrame): DataFrame =
+    Superstep.run(s, op, nodes.select(col("node"), lit(1.0).as("r")), iters, 2) {
+      (ranks, _) =>
+        pagerankStep(arcs, stateJoin(ranks.select(col("node").as("rn"), col("r"))), term)
     }
-    ranks.filter(col("node") % 2 === 1)
+
+  /** One PageRank superstep: join the (rn, r) rank state onto the arc
+    * list's src and sum each arc's `term` (its share of r) per dst.
+    * Per-term contributions are rounded at the 9th decimal via the
+    * 1e9-scaled BIGINT device and summed exactly (order-blind).
+    * round(y*1e9, 0) is computed on the SAME double product in both
+    * engines — measured zero-divergence, unlike round(y, 9) whose
+    * decimal-vs-float implementations split true near-ties (~1e-5 of
+    * terms; one such term broke gcn_norm at sf0.1). */
+  private[graft] def pagerankStep(arcs: DataFrame, state: DataFrame,
+      term: Column): DataFrame =
+    arcs.join(state, col("src") === col("rn"))
+      .groupBy(col("dst"))
+      .agg((lit(0.15) + lit(0.85)
+        * (sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9)).as("r"))
+      .select(col("dst").as("node"), col("r"))
+
+  /** Top-20 parts (odd ids of the bipartite encoding) by round-6 rank,
+    * id tie-break — the output of every graph PageRank variant;
+    * `positiveOnly` drops parts whose rank rounds to 0 (PPR). */
+  private def topParts(ranks: DataFrame, positiveOnly: Boolean = false): DataFrame = {
+    val parts = ranks.filter(col("node") % 2 === 1)
       .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
+    (if (positiveOnly) parts.filter(col("rank") > 0) else parts)
       .orderBy(col("rank").desc, col("part_key").asc)
       .limit(20)
   }
@@ -1015,34 +1037,22 @@ object GraphOps {
     * power iteration with the transition probability w_uv/W_u in the
     * numerator — purchase multiplicity instead of the uniform 1/deg, so
     * a part bought repeatedly by its customers outranks one bought once
-    * by the same customers. Same 10 iterations, same reset 0.15, same
+    * by the same customers. Same iterations, same reset 0.15, same
     * per-term 1e9-scaled BIGINT rounding device (the double product
     * r·w/W·1e9 is computed identically in both engines), same
     * broadcast-chain/checkpoint cadence. Undirected symmetrized ⇒ no
     * dangling mass: Σr is conserved at |V| every step (mod 1e-9
     * rounding). */
-  def q_graph_pagerank_w(s: SparkSession, dir: String): DataFrame = {
-    val undW = undWeightedArcs(s, dir)
-    // node set of the weighted graph == node set of the distinct graph
-    // (multiplicity never adds or removes a node): r₀ seeds from the
-    // SHARED undDegrees MV instead of a fresh distinct over the arcs
-    var ranks = undDegrees(s, dir).select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to 10) {
-      ranks = undW
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") * col("w") / col("wt") * 1e9))
-            .cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
-  }
+  def q_graph_pagerank_w(s: SparkSession, dir: String): DataFrame =
+    topParts(pagerankWRanks(s, dir))
+
+  /** Full (node, r) rank table of q_graph_pagerank_w. The node set of
+    * the weighted graph == node set of the distinct graph (multiplicity
+    * never adds or removes a node): r₀ seeds from the SHARED undDegrees
+    * MV instead of a fresh distinct over the arcs. */
+  private[graft] def pagerankWRanks(s: SparkSession, dir: String): DataFrame =
+    pagerank(s, "q_graph_pagerank_w", undWeightedArcs(s, dir), undDegrees(s, dir),
+      col("r") * col("w") / col("wt"), PagerankIters, stateHint(s, dir, _, "rn"))
 
   /** BFS hop cap shared with the DuckDB recursive-CTE oracle. */
   val BfsMaxHops = 15
@@ -2134,14 +2144,6 @@ object GraphOps {
   /** HITS iterations (shared with the unrolled oracle CTE chain). */
   val HitsIters = 5
 
-  /** HITS hubs & authorities (Kleinberg 1999) on the bipartite
-    * co-purchase graph — customers are hubs, parts are authorities:
-    * h = A·a, a = Aᵀ·h, each max-normalized per step (max-norm keeps
-    * the arithmetic bit-reproducible across engines; the classic L2
-    * norm would introduce a cross-engine sqrt-of-sum ordering).
-    * 5 iterations, top-20 parts by rounded authority. Each step is two
-    * keyed aggregations over the edge list with the score tables
-    * broadcast — the pagerank execution shape. */
   /** Resource-allocation link-prediction index (Zhou, Lü & Zhang 2009)
     * — the 1/deg(z) companion to q_graph_adamic_adar's 1/ln deg(z) on
     * the IDENTICAL shared-customer pair chain (RA punishes hub
@@ -2210,6 +2212,16 @@ object GraphOps {
       .orderBy(col("n_1hop").desc, col("part_key").asc)
   }
 
+  /** HITS hubs & authorities (Kleinberg 1999) on the bipartite
+    * co-purchase graph — customers are hubs, parts are authorities:
+    * h = A·a, a = Aᵀ·h, each max-normalized per step (max-norm keeps
+    * the arithmetic bit-reproducible across engines; the classic L2
+    * norm would introduce a cross-engine sqrt-of-sum ordering).
+    * HitsIters iterations, top-20 parts by rounded authority. Each
+    * iteration is two supersteps (h, then a) — keyed aggregations over
+    * the edge list with the score tables broadcast, the pagerank
+    * execution shape — each cut by Superstep.run, because both the next
+    * step's state join and its max-norm subquery read it. */
   def q_graph_hits(s: SparkSession, dir: String): DataFrame = {
     // coalesce the checkpointed edge MV for the iterative scans: each
     // of the 10 matvec jobs is scheduler-bound at small |E| (tiny
@@ -2219,97 +2231,49 @@ object GraphOps {
     // scale it saturates at full parallelism and the coalesce becomes
     // a no-op.
     val e = edges(s, dir).coalesce(iterWidth(s, dir))
-    // Max-norm FUSED into the consuming matvec (VERDICT r17 item 9):
-    // the rank table stays RAW (un-normalized) between legs, carrying
-    // its 1-row max beside it; the next leg divides inside its own
-    // keyed aggregation — round((ar/am)·1e9) is the identical IEEE
-    // expression the old normalized projection fed it. What this buys:
-    // the old normalized-hub projection was a THIRD broadcast build per
-    // leg whose job could only start after the max broadcast finished
-    // (nested dependency); now the raw-table and max broadcasts both
-    // read the leg's checkpoint directly and build in parallel — one
-    // fewer serial job per leg in a 52-job query (measured 1.2 s of
-    // inter-job gaps).
-    // One leg = join the raw rank state (+ its 1-row max when a prior
-    // leg produced one) into the edge MV, aggregate per opposite
-    // endpoint with the established rlong 1e9-scaled integer sum. The
-    // per-term expression is EXACTLY the old one — ((raw/max)·1e9) —
-    // only computed inside this leg instead of via an intermediate
-    // normalized projection.
-    def leg(rank: DataFrame, rmax: Option[DataFrame],
-        joinKey: String, outKey: String, out: String): (DataFrame, DataFrame) = {
-      val state = stateHint(s, dir,
-        rank.select(col(rank.columns(0)).as("rn"), col(rank.columns(1)).as("rv")), "rn")
-      val joined = rmax.foldLeft(e.join(state, col(joinKey) === col("rn")))(
-        (df, mx) => df.crossJoin(broadcast(mx)))
-      val term = rmax.map(_ => col("rv") / col("rm")).getOrElse(col("rv"))
-      val raw = joined.groupBy(col(outKey))
-        .agg((sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9).as(out))
-        .ckpt()
-      val rawF = freshStats(s, raw)
-      (rawF, rawF.agg(max(col(out)).as("rm")))
-    }
-    var rank = e.select(col("dst").as("node")).distinct()
+    val init = e.select(col("dst").as("node")).distinct()
       .select(col("node"), lit(1.0).as("a"))
-    var rankMax: Option[DataFrame] = None
-    for (_ <- 1 to HitsIters) {
-      val (h, hm) = leg(rank, rankMax, "dst", "src", "h")
-      val (ar, am) = leg(h, Some(hm), "src", "dst", "ar")
-      rank = ar
-      rankMax = Some(am)
+    // odd steps h = A·a (group by customer), even steps a = Aᵀ·h
+    val auth = Superstep.run(s, "q_graph_hits", init, 2 * HitsIters, 1) { (x, i) =>
+      if (i % 2 == 1) maxNormStep(s, dir, e, x, normed = i > 1, "dst", "src", "h")
+      else maxNormStep(s, dir, e, x, normed = true, "src", "dst", "ar")
     }
-    rank.crossJoin(broadcast(rankMax.get))
+    auth.crossJoin(broadcast(auth.agg(max(col("ar")).as("rm"))))
       .select(col("dst").as("part_key"),
         round(col("ar") / col("rm"), 6).as("authority"))
       .orderBy(col("authority").desc, col("part_key").asc)
       .limit(20)
   }
 
-  /** UNFUSED spec twin of q_graph_hits (the pre-r18 shape: normalize
-    * into an intermediate hub/auth projection per leg, then matvec the
-    * normalized table). Kept as the equality pin for the max-norm
-    * fusion — OptimizationR18Spec asserts the fused query returns
-    * byte-identical rows. Not registered; never run in the bench. */
-  private[graft] def hitsUnfusedTwin(s: SparkSession, dir: String): DataFrame = {
-    val e = edges(s, dir).coalesce(iterWidth(s, dir))
-    var auth = e.select(col("dst").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("a"))
-    for (_ <- 1 to HitsIters) {
-      // round-9 scores summed as 1e9-scaled BIGINTs (exact, order-blind,
-      // long-fast — the q_gnn_gin/adamic-adar integer device; scores are
-      // ≤ 1 post-max-norm so overflow needs ~9e9 neighbors, DECIMAL
-      // being the swap there) — the round-6 double-SUM retirement sweep.
-      // hRaw/aRaw each feed TWO branches (the max-norm broadcast and the
-      // main chain); WITHOUT a cut, each downstream broadcast build
-      // re-executes the |E|-scan join+agg, ~6 edge scans per iteration
-      // (the r06 job-count indictment: ~25 jobs / 8.7 s for 5
-      // iterations). localCheckpoint materializes the 15k-row aggregate
-      // ONCE per leg — 2 edge scans per iteration, every max-norm /
-      // broadcast consumer reads the materialized blocks. (Plain
-      // .persist was A/B-measured ~2.5 s SLOWER here — columnar
-      // InMemoryRelation build + codegen-pipeline break — but it also
-      // never cut the recompute chain for the broadcast subqueries;
-      // the checkpoint does both.)
-      val hRaw = e.join(stateHint(s, dir, auth.select(col("node").as("an"), col("a")), "an"),
-          col("dst") === col("an"))
-        .groupBy(col("src"))
-        .agg((sum(Dsl.rlong(col("a") * 1e9)).cast("double") / 1e9).as("h"))
-        .ckpt()
-      val hRawF = freshStats(s, hRaw)
-      val hub = hRawF.crossJoin(broadcast(hRawF.agg(max(col("h")).as("hm"))))
-        .select(col("src"), (col("h") / col("hm")).as("h"))
-      val aRaw = e.join(stateHint(s, dir, hub.select(col("src").as("hn"), col("h")), "hn"),
-          col("src") === col("hn"))
-        .groupBy(col("dst"))
-        .agg((sum(Dsl.rlong(col("h") * 1e9)).cast("double") / 1e9).as("ar"))
-        .ckpt()
-      val aRawF = freshStats(s, aRaw)
-      auth = aRawF.crossJoin(broadcast(aRawF.agg(max(col("ar")).as("am"))))
-        .select(col("dst").as("node"), (col("ar") / col("am")).as("a"))
-    }
-    auth.select(col("node").as("part_key"), round(col("a"), 6).as("authority"))
-      .orderBy(col("authority").desc, col("part_key").asc)
-      .limit(20)
+  /** One max-norm power-iteration superstep (HITS legs, eigenvector):
+    * join the (key, value) state onto `arcs` at `joinKey` and sum the
+    * state values per `outKey` as `out`, with the established rlong
+    * 1e9-scaled integer sum.
+    *
+    * Max-norm FUSED into the consuming matvec (VERDICT r17 item 9): the
+    * state stays RAW (un-normalized) between steps; when `normed`, this
+    * step builds the state's 1-row max and divides inside its own keyed
+    * aggregation — round((v/max)·1e9) is the identical IEEE expression
+    * an intermediate normalized projection would feed it. What this
+    * buys: the normalized projection was a THIRD broadcast build per
+    * step whose job could only start after the max broadcast finished
+    * (nested dependency); now the raw-table and max broadcasts both read
+    * the previous step's checkpoint directly and build in parallel — one
+    * fewer serial job per step (measured 1.2 s of inter-job gaps in the
+    * 52-job HITS query). */
+  private def maxNormStep(s: SparkSession, dir: String, arcs: DataFrame,
+      state: DataFrame, normed: Boolean, joinKey: String, outKey: String,
+      out: String): DataFrame = {
+    val Array(k, v) = state.columns
+    val joined = arcs.join(
+      stateHint(s, dir, state.select(col(k).as("rn"), col(v).as("rv")), "rn"),
+      col(joinKey) === col("rn"))
+    val (in, term) =
+      if (normed) (joined.crossJoin(broadcast(state.agg(max(col(v)).as("rm")))),
+        col("rv") / col("rm"))
+      else (joined, col("rv"))
+    in.groupBy(col(outKey))
+      .agg((sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9).as(out))
   }
 
   /** 1-layer GraphSAGE-mean: per customer, element-wise mean of purchased
@@ -2348,10 +2312,18 @@ object GraphOps {
     * absent from the rank table, so iteration cost GROWS with reach
     * rather than starting at |V| — the frontier-expansion property that
     * makes PPR cheap on huge graphs. Top-20 parts by round-6 rank. */
-  def q_graph_ppr(s: SparkSession, dir: String): DataFrame = {
+  def q_graph_ppr(s: SparkSession, dir: String): DataFrame =
     // shared session MVs — same arc list + degree table as pagerank
-    val undW = undWeighted(s, dir)
-    // seed = smallest part node in the odd encoding; 1-row broadcast
+    topParts(ppr(s, dir, "q_graph_ppr", undWeighted(s, dir), col("r") / col("d")),
+      positiveOnly = true)
+
+  /** `PprIters` personalized-PageRank supersteps from the seed (the
+    * smallest part node, 1-row) over a dst-keyed arc list, checkpointed
+    * every 2nd step; returns the full (node, r) table of reached nodes.
+    * Shared by q_graph_ppr and q_graph_ppr_w, which differ in the arc
+    * MV and the per-arc share `term` of r. */
+  private def ppr(s: SparkSession, dir: String, op: String, arcs: DataFrame,
+      term: Column): DataFrame = {
     val seed = undDegrees(s, dir).filter(col("node") % 2 === 1)
       .agg(min(col("node")).as("sn"))
     // teleport row shaped like a pre-aggregation contribution (c9 = 0,
@@ -2363,29 +2335,20 @@ object GraphOps {
     // elsewhere.
     val teleport9 = seed.select(col("sn").as("node"),
       lit(0L).as("c9"), lit(0.15).as("t"))
-    var ranks = seed.select(col("sn").as("node"), lit(1.0).as("r"))
-    for (it <- 1 to PprIters) {
-      ranks = undW
+    Superstep.run(s, op, seed.select(col("sn").as("node"), lit(1.0).as("r")),
+      PprIters, 2) { (ranks, _) =>
+      arcs
         .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
           col("src") === col("rn"))
         // 1e9-scaled BIGINT per-term rounding + exact sum (order-blind;
-        // see q_graph_pagerank for why the scaled form, not round-9)
-        .select(col("dst").as("node"),
-          Dsl.rlong(col("r") / col("d") * 1e9).as("c9"),
+        // see pagerankStep for why the scaled form, not round-9)
+        .select(col("dst").as("node"), Dsl.rlong(term * 1e9).as("c9"),
           lit(0.0).as("t"))
         .unionByName(teleport9)
         .groupBy(col("node"))
         .agg((lit(0.85) * (sum(col("c9")).cast("double") / 1e9)
           + sum(col("t"))).as("r"))
-      // freshStats: the loop's plan-size estimate compounds quartically
-      // through preserved checkpoint stats (the MST finding)
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
     }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .filter(col("rank") > 0)
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
   }
 
   /** WEIGHTED personalized PageRank (r17, VERDICT r16 item 5's second
@@ -2397,36 +2360,9 @@ object GraphOps {
     * identical double product; reads the shared weighted arc MV
     * beside the unweighted one. Cost ∝ reach of the seed, not |V| —
     * ranks start 1-row and grow with the frontier. */
-  def q_graph_ppr_w(s: SparkSession, dir: String): DataFrame = {
-    val undW = undWeightedArcs(s, dir)
-    val seed = undDegrees(s, dir).filter(col("node") % 2 === 1)
-      .agg(min(col("node")).as("sn"))
-    // teleport fused into the single keyed aggregation — see q_graph_ppr
-    // (bit-identical; halves the per-iteration exchanges)
-    val teleport9 = seed.select(col("sn").as("node"),
-      lit(0L).as("c9"), lit(0.15).as("t"))
-    var ranks = seed.select(col("sn").as("node"), lit(1.0).as("r"))
-    for (it <- 1 to PprIters) {
-      ranks = undW
-        .join(stateHint(s, dir, ranks.select(col("node").as("rn"), col("r")), "rn"),
-          col("src") === col("rn"))
-        .select(col("dst").as("node"),
-          Dsl.rlong(col("r") * col("w") / col("wt") * 1e9).as("c9"),
-          lit(0.0).as("t"))
-        .unionByName(teleport9)
-        .groupBy(col("node"))
-        .agg((lit(0.85) * (sum(col("c9")).cast("double") / 1e9)
-          + sum(col("t"))).as("r"))
-      // freshStats: the loop's plan-size estimate compounds quartically
-      // through preserved checkpoint stats (the MST finding)
-      if (it % 2 == 0) ranks = freshStats(s, ranks.ckpt())
-    }
-    ranks.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("part_key"), round(col("r"), 6).as("rank"))
-      .filter(col("rank") > 0)
-      .orderBy(col("rank").desc, col("part_key").asc)
-      .limit(20)
-  }
+  def q_graph_ppr_w(s: SparkSession, dir: String): DataFrame =
+    topParts(ppr(s, dir, "q_graph_ppr_w", undWeightedArcs(s, dir),
+      col("r") * col("w") / col("wt")), positiveOnly = true)
 
   /** Butterfly (bipartite 4-cycle) census of the customer–part graph
     * (Sanei-Mehri 2018) — the bipartite analog of the triangle count and
@@ -2551,6 +2487,9 @@ object GraphOps {
     val ue = undProj(s, dir, TriangleMinCooccur)
     var x = ue.select(col("a").as("node")).distinct()
       .select(col("node"), lit(1.0).as("x"))
+    // a hand loop with a bare ckpt, not Superstep.run: its cut adds
+    // freshStats, which made this query slower (warm TimeQ A/B at
+    // sf0.1, 4 cores: 0.86 → 0.97 s median)
     for (it <- 1 to KatzIters) {
       x = ue
         .join(stateHint(s, dir, x.select(col("node").as("xn"), col("x")), "xn"),
@@ -2630,29 +2569,17 @@ object GraphOps {
   def q_graph_eigenvector(s: SparkSession, dir: String): DataFrame = {
     val ue = undProj(s, dir, TriangleMinCooccur)
     // max-norm fused into the consuming matvec (the q_graph_hits r18
-    // device): the state stays RAW between steps with its 1-row max
-    // beside it; the next step divides inside its keyed aggregation —
-    // round((xr/xm)·1e9) is the identical IEEE expression the old
-    // normalized projection fed it, and the raw-state and max
-    // broadcasts now build in parallel off the step checkpoint instead
-    // of nesting.
+    // device, maxNormStep): the state stays RAW between steps and the
+    // next step divides by its 1-row max inside its keyed aggregation.
+    // Each step is cut with a bare ckpt in a hand loop, not by
+    // Superstep.run: its cut adds freshStats, which made this
+    // query slower (warm TimeQ A/B at sf0.1, 4 cores: 1.30 → 1.48 s
+    // median).
     var x = ue.select(col("a").as("node")).distinct()
       .select(col("node"), lit(1.0).as("xv"))
-    var xMax: Option[DataFrame] = None
-    for (_ <- 1 to EigIters) {
-      val joined0 = ue
-        .join(stateHint(s, dir, x.select(col(x.columns(0)).as("xn"), col(x.columns(1)).as("xv")), "xn"),
-          col("b") === col("xn"))
-      val joined = xMax.foldLeft(joined0)((df, mx) => df.crossJoin(broadcast(mx)))
-      val term = xMax.map(_ => col("xv") / col("xm")).getOrElse(col("xv"))
-      val raw = joined.groupBy(col("a"))
-        .agg((sum(Dsl.rlong(term * 1e9)).cast("double") / 1e9)
-          .as("xr"))
-        .ckpt()
-      x = raw
-      xMax = Some(raw.agg(max(col("xr")).as("xm")))
-    }
-    x.crossJoin(broadcast(xMax.get))
+    for (i <- 1 to EigIters)
+      x = maxNormStep(s, dir, ue, x, normed = i > 1, "b", "a", "xr").ckpt()
+    x.crossJoin(broadcast(x.agg(max(col("xr")).as("xm"))))
       .select(col("a").as("part_key"), round(col("xr") / col("xm"), 6).as("eigen"))
       .orderBy(col("eigen").desc, col("part_key").asc)
       .limit(20)

@@ -576,13 +576,14 @@ object Oracle {
          |WHERE e1.a < e1.b AND e1.b < e2.b
          |ORDER BY pattern""".stripMargin,
 
-    // 10 power-iteration steps unrolled as a CTE chain (recursive CTEs
-    // can't carry aggregation in DuckDB); same formula as the Spark loop:
+    // PagerankIters power-iteration steps unrolled as a CTE chain
+    // (recursive CTEs can't carry aggregation in DuckDB); same formula as
+    // the Spark loop:
     // r_{t+1}(v) = 0.15 + 0.85 * Σ_{u∈N(v)} r_t(u)/deg(u), r_0 = 1.
     // Per-term 1e9-scaled BIGINT rounding + exact sum — order-blind and
     // computed on the identical double product in both engines.
     "q_graph_pagerank" -> {
-      val steps = (1 to 10).map { i =>
+      val steps = (1 to GraphOps.PagerankIters).map { i =>
         s"""r$i AS (SELECT u.dst AS node,
            |  CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)
            |    * (CAST(SUM(CAST(ROUND(p.r / dg.d * 1e9, 0) AS BIGINT)) AS DOUBLE) / 1e9) AS r
@@ -597,7 +598,7 @@ object Oracle {
          |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM deg),
          |$steps
          |SELECT (node - 1) // 2 AS part_key, ROUND(r, 6) AS rank
-         |FROM r10 WHERE node % 2 = 1
+         |FROM r${GraphOps.PagerankIters} WHERE node % 2 = 1
          |ORDER BY rank DESC, part_key ASC LIMIT 20""".stripMargin
     },
 
@@ -8055,7 +8056,7 @@ object Oracle {
     // double product r * w / wt * 1e9 is the same left-assoc chain in
     // both engines, then the 1e9-scaled BIGINT exact-sum device.
     "q_graph_pagerank_w" -> {
-      val steps = (1 to 10).map { i =>
+      val steps = (1 to GraphOps.PagerankIters).map { i =>
         s"""r$i AS (SELECT u.dst AS node,
            |  CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)
            |    * (CAST(SUM(CAST(ROUND(p.r * u.w / u.wt * 1e9, 0) AS BIGINT)) AS DOUBLE) / 1e9) AS r
@@ -8073,7 +8074,7 @@ object Oracle {
          |r0 AS (SELECT n AS node, CAST(1.0 AS DOUBLE) AS r FROM ws),
          |$steps
          |SELECT (node - 1) // 2 AS part_key, ROUND(r, 6) AS rank
-         |FROM r10 WHERE node % 2 = 1
+         |FROM r${GraphOps.PagerankIters} WHERE node % 2 = 1
          |ORDER BY rank DESC, part_key ASC LIMIT 20""".stripMargin
     },
 

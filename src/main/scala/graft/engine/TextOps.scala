@@ -872,22 +872,12 @@ object TextOps {
     val arcs = ue.join(deg, col("src") === col("dn"))
       .select(col("src"), col("dst"), col("d"))
       .ckpt("textrank_arcs")
-    var r = arcs.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("r"))
-    for (it <- 1 to TextrankIters) {
-      r = arcs
-        .join(r.select(col("node").as("pn"), col("r")), col("src") === col("pn"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15) + lit(0.85)
-          * (sum(Dsl.rlong(col("r") / col("d") * 1e9))
-            .cast("double") / 1e9)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-      // checkpoint every 2nd step (the pagerank cadence): the word
-      // graph is vocabulary-bounded, so materializing every iteration
-      // was pure scheduler overhead — this loop ran 61 jobs per query
-      // (measured), ~0.9 s of it planning gaps.
-      if (it % 2 == 0) r = GraphOps.freshStats(s, r.ckpt())
-    }
+    // the shared PageRank superstep and cut cadence; the rank state
+    // joins UNHINTED — it is vocabulary-sized, and stateHint's guard
+    // measures co-purchase |V|, not this graph
+    val r = GraphOps.pagerank(s, "q_text_textrank", arcs,
+      arcs.select(col("src").as("node")).distinct(),
+      col("r") / col("d"), TextrankIters, identity)
     r.select(col("node").as("word"), round(col("r"), 6).as("rank"))
       .orderBy(col("rank").desc, col("word").asc).limit(20)
   }

@@ -13,9 +13,58 @@ class OptimizationR18Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.{sf0001, sf001}
 
+  /** UNFUSED spec twin of q_graph_hits (the pre-r18 shape: normalize
+    * into an intermediate hub/auth projection per leg, then matvec the
+    * normalized table) — the equality pin for the max-norm fusion. */
+  private def hitsUnfusedTwin(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import engine.{Dsl, GraphOps}
+    import engine.GraphOps.{edges, freshStats, iterWidth, stateHint}
+    import engine.Ckpt.CkptOps
+    val e = edges(s, dir).coalesce(iterWidth(s, dir))
+    var auth = e.select(col("dst").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("a"))
+    for (_ <- 1 to GraphOps.HitsIters) {
+      // round-9 scores summed as 1e9-scaled BIGINTs (exact, order-blind,
+      // long-fast — the q_gnn_gin/adamic-adar integer device; scores are
+      // ≤ 1 post-max-norm so overflow needs ~9e9 neighbors, DECIMAL
+      // being the swap there) — the round-6 double-SUM retirement sweep.
+      // hRaw/aRaw each feed TWO branches (the max-norm broadcast and the
+      // main chain); WITHOUT a cut, each downstream broadcast build
+      // re-executes the |E|-scan join+agg, ~6 edge scans per iteration
+      // (the r06 job-count indictment: ~25 jobs / 8.7 s for 5
+      // iterations). localCheckpoint materializes the 15k-row aggregate
+      // ONCE per leg — 2 edge scans per iteration, every max-norm /
+      // broadcast consumer reads the materialized blocks. (Plain
+      // .persist was A/B-measured ~2.5 s SLOWER here — columnar
+      // InMemoryRelation build + codegen-pipeline break — but it also
+      // never cut the recompute chain for the broadcast subqueries;
+      // the checkpoint does both.)
+      val hRaw = e.join(stateHint(s, dir, auth.select(col("node").as("an"), col("a")), "an"),
+          col("dst") === col("an"))
+        .groupBy(col("src"))
+        .agg((sum(Dsl.rlong(col("a") * 1e9)).cast("double") / 1e9).as("h"))
+        .ckpt()
+      val hRawF = freshStats(s, hRaw)
+      val hub = hRawF.crossJoin(broadcast(hRawF.agg(max(col("h")).as("hm"))))
+        .select(col("src"), (col("h") / col("hm")).as("h"))
+      val aRaw = e.join(stateHint(s, dir, hub.select(col("src").as("hn"), col("h")), "hn"),
+          col("src") === col("hn"))
+        .groupBy(col("dst"))
+        .agg((sum(Dsl.rlong(col("h") * 1e9)).cast("double") / 1e9).as("ar"))
+        .ckpt()
+      val aRawF = freshStats(s, aRaw)
+      auth = aRawF.crossJoin(broadcast(aRawF.agg(max(col("ar")).as("am"))))
+        .select(col("dst").as("node"), (col("ar") / col("am")).as("a"))
+    }
+    auth.select(col("node").as("part_key"), round(col("a"), 6).as("authority"))
+      .orderBy(col("authority").desc, col("part_key").asc)
+      .limit(20)
+  }
+
   test("hits max-norm fusion returns rows identical to the unfused twin") {
     val fused = engine.GraphOps.q_graph_hits(spark, sf001).collect().toSeq
-    val twin = engine.GraphOps.hitsUnfusedTwin(spark, sf001).collect().toSeq
+    val twin = hitsUnfusedTwin(spark, sf001).collect().toSeq
     assert(fused == twin)
   }
 

@@ -249,12 +249,15 @@ class PlanAuditSpec extends AnyFunSuite {
     // partitioned on dst and the checkpoint preserves that partitioning,
     // so each iteration's groupBy(dst) aggregates partition-locally —
     // the ONLY per-step data movement is the |V|-sized rank broadcast
-    import org.apache.spark.sql.functions.{broadcast, col, lit, sum}
+    // Audits the engine's own shared step (pagerankStep, the body of
+    // every graph PageRank superstep) with the state joined through the
+    // same probe-gated stateHint the operators use.
+    import org.apache.spark.sql.functions.{col, lit}
     val undW = GraphOps.undWeighted(spark, sf0001)
     val ranks = GraphOps.undDegrees(spark, sf0001)
       .select(col("node").as("rn"), lit(1.0).as("r"))
-    val step = undW.join(broadcast(ranks), col("src") === col("rn"))
-      .groupBy(col("dst")).agg(sum(col("r") / col("d")).as("r"))
+    val step = GraphOps.pagerankStep(undW,
+      GraphOps.stateHint(spark, sf0001, ranks, "rn"), col("r") / col("d"))
     step.collect()
     val p = step.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), s"rank table must broadcast:\n$p")
@@ -762,6 +765,10 @@ class PlanAuditSpec extends AnyFunSuite {
       "under the guard, the degree table must broadcast onto both arc ends")
     val small = GraphOps.q_graph_pagerank(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    // APPNP's per-step z table is |V|-sized state too
+    val appnpHinted = graft.engine.Gnn.q_gnn_appnp(spark, sf0001)
+    assert(hintCount(appnpHinted) >= 1, "under the guard, APPNP's z table must broadcast")
+    val appnpSmall = appnpHinted.collect().toSeq
     spark.conf.set(guardKey, "0")
     try {
       assert(hintCount(GraphOps.q_graph_assortativity(spark, sf0001)) == 0,
@@ -781,6 +788,11 @@ class PlanAuditSpec extends AnyFunSuite {
       val big = GraphOps.q_graph_pagerank(spark, sf0001).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(big == small, "pagerank must be identical across join regimes")
+      val appnp = graft.engine.Gnn.q_gnn_appnp(spark, sf0001)
+      assert(hintCount(appnp) == 0,
+        "past the guard, APPNP's z table may not carry a broadcast hint")
+      assert(appnp.collect().toSeq == appnpSmall,
+        "APPNP must be identical across join regimes")
     } finally spark.conf.unset(guardKey)
   }
 
